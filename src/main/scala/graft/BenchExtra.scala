@@ -43,25 +43,24 @@ object BenchExtra {
     val out = new StringBuilder
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
+      // a rep that throws records its FAIL line in place of a timing, so a
+      // crashed query can never read as a fast one
+      def timed(label: String, fail: String)(run: => Unit): Unit = {
+        val t0 = System.nanoTime()
+        val line =
+          try { run; f"EXTRA $name%-28s $label%-10s ${(System.nanoTime() - t0) / 1e9}%9.3f s" }
+          catch { case e: Throwable => s"$fail $name: $e" }
+        println(line); out.append(line).append('\n')
+      }
       (1 to reps).foreach { rep =>
         spark.sparkContext.setJobDescription(s"$tag:$name:count:$rep")
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count()
-        catch { case e: Throwable => println(s"FAIL $name: $e") }
-        val sec = (System.nanoTime() - t0) / 1e9
-        val line = f"EXTRA $name%-28s count rep$rep $sec%9.3f s"
-        println(line); out.append(line).append('\n')
+        timed(s"count rep$rep", "FAIL")(fn(spark, sfDir).count())
       }
       // noop isolation (skip streaming rows: their work is eager inside fn
       // and a second full stream run per rep would double-charge it)
       if (!name.startsWith("q_stream_")) {
         spark.sparkContext.setJobDescription(s"$tag:$name:noop")
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => println(s"FAIL-noop $name: $e") }
-        val sec = (System.nanoTime() - t0) / 1e9
-        val line = f"EXTRA $name%-28s noop       $sec%9.3f s"
-        println(line); out.append(line).append('\n')
+        timed("noop", "FAIL-noop")(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
       }
       // streaming queries execute eagerly inside the builder: a plan dump
       // would re-run the whole stream just to print the memory-sink table

@@ -28,8 +28,24 @@ import pkel.transcript.TranscriptSynth
   */
 object PipelineApp {
 
-  private def parseArgs(args: Array[String]): Map[String, String] =
-    args.sliding(2, 2).collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }.toMap
+  /** Every `--key` that [[main]] reads. */
+  val validKeys: Seq[String] = Seq("out", "convs", "seed", "input", "dump-input",
+    "multi-rate", "table-rate", "store", "edge-threshold", "prune", "cc-star",
+    "cc-reliable-every")
+
+  /** `--key value` pairs. An unknown key, a stray value or a flag with no
+    * value fails with the list of valid keys, so a stale or misspelled
+    * option can never silently run a different config. */
+  def parseArgs(args: Array[String]): Map[String, String] = {
+    def fail(problem: String): Nothing = throw new IllegalArgumentException(
+      s"$problem; valid keys: ${validKeys.map("--" + _).mkString(" ")}")
+    args.grouped(2).map {
+      case Array(k, _*) if !k.startsWith("--") => fail(s"expected a --key before '$k'")
+      case Array(k, _*) if !validKeys.contains(k.drop(2)) => fail(s"unknown option $k")
+      case Array(k, v) if !v.startsWith("--") => k.drop(2) -> v
+      case Array(k, _*) => fail(s"$k has no value")
+    }.toMap
+  }
 
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args)
@@ -89,12 +105,6 @@ object PipelineApp {
     val io = pkel.io.StageStore.forBackend(opts.getOrElse("store", "snapshot"),
       spark, out, s"run-${java.util.UUID.randomUUID().toString.take(8)}")
     val cfg = Pipeline.Config(
-      vecMode = opts.getOrElse("vec-mode", "auto") match {
-        case "memo" => Pipeline.VecMemo
-        case "carry" => Pipeline.VecCarry
-        case "auto" => Pipeline.VecAuto()
-        case other => sys.error(s"--vec-mode must be memo|carry|auto, got $other")
-      },
       edgeThreshold = opts.getOrElse("edge-threshold", "0.90").toDouble,
       // --prune true: drop cross-key pairs provably below the edge threshold
       // (length bound) before the scoring kernel; clusters are invariant,

@@ -43,6 +43,11 @@ final class Memo[T](f: String => T, cap: Int = Memo.DefaultCap,
       // CounterCells and, called per miss from 32 threads over a corpus
       // with more distinct surfaces than the cap (typos at production
       // scale), it measurably inflated every memo-using stage (~13% e2e).
+      // The cap is approximate by design: concurrent misses that all read the
+      // counter below the cap each insert, so the map can overshoot it by up
+      // to the number of threads; and a clearAll racing an insert can leave
+      // the counter a few above the map size (the table then stops filling
+      // a few entries early). Neither grows without bound.
       if (v != null && table.n.get < cap &&
           memo.putIfAbsent(s, v.asInstanceOf[AnyRef]) == null)
         table.n.incrementAndGet()

@@ -214,65 +214,28 @@ class TranscriptPipelineSpec extends SparkSpec {
     assert(summary.pairwiseF1AtKey >= 0.99, f"pairwise F1 at key ${summary.pairwiseF1AtKey}%.4f < 0.99")
   }
 
-  test("VecAuto picks memo vs vec-carry from the KMV distinct-surface estimate, identically clustered") {
-    val seed = 23L
-    val transcripts = TranscriptSynth.generate(spark, entries, nConvs = 80, seed = seed)
-    val gold = goldDf(transcripts, seed)
-    def runWith(mode: Pipeline.VecMode, tag: String): (Map[Long, Long], Option[(Long, Long)]) = {
-      val root = Files.createTempDirectory(s"pkel_vec${tag}_").toString
-      val io = new TableIO(spark, root, s"vec-$tag")
-      val (c, _) = Pipeline.run(spark, transcripts, entries,
-        Pipeline.Config(vecMode = mode), io, Some(gold))
-      val clusters = c.select("mention_id", "cluster_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
-      val decision = {
-        val m = io.metrics()
-        val est = m.filter(col("stage") === "keyed.distinct_surfaces_est")
-          .select("rows_out").collect().map(_.getLong(0)).headOption
-        val carry = m.filter(col("stage") === "keyed.vec_carry")
-          .select("rows_out").collect().map(_.getLong(0)).headOption
-        est.flatMap(e => carry.map(cr => (e, cr)))
-      }
-      (clusters, decision)
-    }
-    // the transcript corpus holds a few hundred distinct surfaces: with the
-    // cheap built-in encoder auto always picks memo (SURFACE_CARD.md: memo
-    // wins at every cardinality when encoding is cheap); with a costly
-    // encoder declared and a threshold below the corpus cardinality it
-    // flips to carry
-    val (cMemoAuto, dMemoAuto) = runWith(Pipeline.VecAuto(distinctThreshold = 10), "auto-cheap")
-    val (cCarryAuto, dCarryAuto) = runWith(
-      Pipeline.VecAuto(distinctThreshold = 10, costlyEncoder = true), "auto-costly")
-    val (cExplicit, dExplicit) = runWith(Pipeline.VecMemo, "memo")
-    assert(dMemoAuto.exists { case (est, carry) => est > 10 && carry == 0L },
-      s"cheap-encoder auto should pick memo at any cardinality: $dMemoAuto")
-    assert(dCarryAuto.exists { case (est, carry) => est > 10 && carry == 1L },
-      s"costly-encoder auto above threshold should pick carry: $dCarryAuto")
-    assert(dExplicit.isEmpty, "explicit mode must not spend the KMV aggregate")
-    // sourcing vectors from the memo or from the carried column is a pure
-    // execution-strategy choice: clusters must be identical
-    assert(cMemoAuto == cCarryAuto, "memo vs carry changed the clusters")
-    assert(cMemoAuto == cExplicit)
-  }
-
   test("salting changes pair counts but never the clusters") {
     val seed = 13L
     val transcripts = TranscriptSynth.generate(spark, entries, nConvs = 80, seed = seed)
     val gold = goldDf(transcripts, seed)
-    def clustersWith(salt: Int): Map[Long, String] = {
+    // fixed salt: adaptive salting (the default) would ignore saltBuckets
+    def runWith(salt: Int): (Map[Long, String], Long) = {
       val root = Files.createTempDirectory(s"pkel_salt${salt}_").toString
-      val cfg = Pipeline.Config(pairCfg = PairGen.Config(saltBuckets = salt))
+      val cfg = Pipeline.Config(pairCfg = PairGen.Config(adaptiveSalt = false, saltBuckets = salt))
       val io = new TableIO(spark, root, s"salt-$salt")
-      val (c, _) = Pipeline.run(spark, transcripts, entries, cfg, io, Some(gold))
+      val (c, summary) = Pipeline.run(spark, transcripts, entries, cfg, io, Some(gold))
       // canonicalize cluster ids by their member sets (min member id)
       val rows = c.select("mention_id", "cluster_id").collect().map(r => (r.getLong(0), r.getLong(1)))
-      rows.groupBy(_._2).toSeq.flatMap { case (_, ms) =>
+      val clusters = rows.groupBy(_._2).toSeq.flatMap { case (_, ms) =>
         val label = ms.map(_._1).min.toString
         ms.map(m => m._1 -> label)
       }.toMap
+      (clusters, summary.pairs)
     }
-    val unsalted = clustersWith(1)
-    val salted = clustersWith(8)
+    val (unsalted, unsaltedPairs) = runWith(1)
+    val (salted, saltedPairs) = runWith(8)
+    assert(unsaltedPairs != saltedPairs,
+      s"saltBuckets 1 vs 8 must change the scored pair count ($unsaltedPairs both times)")
     assert(unsalted == salted, "salting must not change the transitive clusters")
   }
 

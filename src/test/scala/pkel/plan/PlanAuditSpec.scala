@@ -68,26 +68,6 @@ class PlanAuditSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), s"index join must broadcast:\n${plan.take(2000)}")
   }
 
-  test("fused pair scoring: the kernel pipelines on the bucket aggregation output") {
-    import spark.implicits._
-    val keyed = (1L to 100L).map(i => (i, "cl", Seq("cl"), s"m$i"))
-      .toDF("mention_id", "blocking_key", "tokens", "mention")
-    val pairs = pkel.blocking.PairGen.blockingKeyPairs(keyed, pkel.blocking.PairGen.Config())
-    val scored = pkel.scoring.PairScorer.scorePairs(pairs)
-    val plan = scored.queryExecution.executedPlan.toString
-    // pairs are exploded out of the bucket collect_list aggregation and the
-    // scorer (MapPartitions) must consume them with no Exchange in between —
-    // pair rows never shuffle
-    val lines = plan.linesIterator.toSeq
-    val mapIdx = lines.indexWhere(_.contains("MapPartitions"))
-    val aggIdx = lines.indexWhere(_.contains("Aggregate"))
-    assert(mapIdx >= 0 && aggIdx > mapIdx, s"unexpected plan shape:\n$plan")
-    val between = lines.slice(mapIdx, aggIdx)
-    assert(!between.exists(_.contains("Exchange")),
-      s"exchange between scorer and pair explosion:\n${between.mkString("\n")}")
-    assert(!plan.contains("Join"), s"pair generation should not self-join:\n$plan")
-  }
-
   test("bucket-kernel scoring path: one mention-scale exchange, no join, no pair shuffle") {
     import spark.implicits._
     val keyed = (1L to 500L).map(i => (i, if (i % 7 == 0) "auc inf" else "cl", Seq("cl"), s"m$i"))

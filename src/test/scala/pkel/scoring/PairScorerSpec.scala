@@ -5,8 +5,7 @@ import pkel.SparkSpec
 import pkel.blocking.PairGen
 
 /** Pins the kernel-fused bucket scoring path (`scoreCandidates`) to the
-  * relational reference path (`scorePairs` over exploded candidate pairs),
-  * and the precomputed-vec seam to the in-kernel encoder. */
+  * relational reference path (`scorePairs` over exploded candidate pairs). */
 class PairScorerSpec extends SparkSpec {
 
   import spark.implicits._
@@ -21,7 +20,9 @@ class PairScorerSpec extends SparkSpec {
         case 0 => "auc inf"; case 1 => "cl"; case 2 => "auc ss"
         case 3 => "t1/2"; case _ => "vd ss"
       }
-      (i, key, s"surface ${key.toUpperCase} $i")
+      // seven surfaces per key, shared by many mentions: buckets intern
+      // d < n surfaces and the cross-bucket surface-pair memo hits
+      (i, key, s"surface ${key.toUpperCase} ${i % 7}")
     })
 
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
@@ -29,26 +30,33 @@ class PairScorerSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
 
-  test("scoreCandidates == scorePairs over candidatePairsWithFeatures (pair set + scores)") {
-    val cfg = PairGen.Config(adaptiveSalt = true, targetBucketSize = 16)
-    val viaKernel = rowsOf(PairScorer.scoreCandidates(corpus, cfg))
-    val viaRows = rowsOf(PairScorer.scorePairs(PairGen.candidatePairsWithFeatures(corpus, cfg)))
-    assert(viaKernel == viaRows,
-      s"kernel-only: ${(viaKernel -- viaRows).take(5)}; rows-only: ${(viaRows -- viaKernel).take(5)}")
-  }
+  // every surface distinct: the per-partition score memos never hit
+  private val uniqueSurfaces = keyedDf((1L to 120L).map(i => (i, "cl", s"unique-surface-$i")))
 
-  test("precomputed vec columns produce identical scores to in-kernel encoding") {
-    val embedUdf = udf((s: String) => Embedder.default.encode(Option(s).getOrElse("")))
-    val withVec = corpus.withColumn("vec", embedUdf(col("mention")))
-    val cfg = PairGen.Config(adaptiveSalt = true, targetBucketSize = 16)
-    assert(rowsOf(PairScorer.scoreCandidates(withVec, cfg)) ==
-      rowsOf(PairScorer.scoreCandidates(corpus, cfg)))
-    // and the vec columns are consumed, not leaked into the output
-    val out = PairScorer.scoreCandidates(withVec, cfg, carryFeatures = true)
-    assert(!out.columns.contains("vec_a") && !out.columns.contains("vec_b"))
-    assert(out.columns.contains("mention_a"), "carryFeatures must keep feature columns")
-    assert(!PairScorer.scoreCandidates(withVec, cfg).columns.contains("mention_a"),
-      "lean output must drop feature columns")
+  private def fullRowsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Long, Long, Long)] =
+    df.select(col("src"), col("dst"),
+      (col("key_sim") * 1e6).cast("long"), (col("jw_sim") * 1e6).cast("long"),
+      (col("cos_sim") * 1e6).cast("long"), (col("score") * 1e6).cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getLong(5))).toSet
+
+  test("scoreCandidates == scorePairs over candidatePairsWithFeatures (pair set + scores)") {
+    // both salt modes (adaptive buckets, and fixed salt with its unbounded
+    // buckets) over both corpora (repeated surfaces, and the memo-miss
+    // regime), comparing all four similarity columns
+    for {
+      (corpusName, mentions) <- Seq("repeated surfaces" -> corpus, "unique surfaces" -> uniqueSurfaces)
+      cfg <- Seq(
+        PairGen.Config(adaptiveSalt = true, targetBucketSize = 16),
+        PairGen.Config(adaptiveSalt = false, saltBuckets = 4))
+    } {
+      val viaKernel = fullRowsOf(PairScorer.scoreCandidates(mentions, cfg))
+      val viaRows = fullRowsOf(PairScorer.scorePairs(PairGen.candidatePairsWithFeatures(mentions, cfg)))
+      assert(viaKernel == viaRows,
+        s"$corpusName, cfg=$cfg kernel-only: ${(viaKernel -- viaRows).take(5)}; " +
+          s"rows-only: ${(viaRows -- viaKernel).take(5)}")
+      assert(viaKernel.nonEmpty, s"$corpusName, cfg=$cfg")
+    }
   }
 
   test("scoreCandidates rows are invariant to shuffle-partition count") {
@@ -62,41 +70,5 @@ class PairScorerSpec extends SparkSpec {
       assert(a == b, "pair set + scores must not depend on physical layout")
       assert(a.nonEmpty)
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
-  }
-
-  private def fullRowsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Long, Long, Long)] =
-    df.select(col("src"), col("dst"),
-      (col("key_sim") * 1e6).cast("long"), (col("jw_sim") * 1e6).cast("long"),
-      (col("cos_sim") * 1e6).cast("long"), (col("score") * 1e6).cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5))).toSet
-
-  test("scoreMentions (one-exchange kernel) == scorePairs over blockingKeyPairs") {
-    // the one-exchange kernel replicates the relational salted path by hand
-    // (XXH64 pmod salt assignment, TreeMap salt order, min-id reps) — this is
-    // the parity pin its docstring promises, over BOTH salt modes
-    for (cfg <- Seq(
-        PairGen.Config(adaptiveSalt = true, targetBucketSize = 16),
-        PairGen.Config(adaptiveSalt = false, saltBuckets = 4))) {
-      val viaKernel = fullRowsOf(PairScorer.scoreMentions(corpus, cfg))
-      val viaRows = fullRowsOf(PairScorer.scorePairs(PairGen.blockingKeyPairs(corpus, cfg)))
-      assert(viaKernel == viaRows,
-        s"cfg=$cfg kernel-only: ${(viaKernel -- viaRows).take(5)}; " +
-          s"rows-only: ${(viaRows -- viaKernel).take(5)}")
-      assert(viaKernel.nonEmpty)
-    }
-  }
-
-  test("unique-surface corpus (memo-miss regime): vec path scores each mention once") {
-    // every surface distinct → the per-pair memo never hits; correctness must
-    // hold on both paths regardless
-    val unique = keyedDf((1L to 120L).map(i => (i, "cl", s"unique-surface-$i")))
-    val embedUdf = udf((s: String) => Embedder.default.encode(Option(s).getOrElse("")))
-    val cfg = PairGen.Config(adaptiveSalt = false, saltBuckets = 2)
-    val memo = rowsOf(PairScorer.scoreCandidates(unique, cfg))
-    val vec = rowsOf(PairScorer.scoreCandidates(
-      unique.withColumn("vec", embedUdf(col("mention"))), cfg))
-    assert(memo == vec)
-    assert(memo.nonEmpty)
   }
 }

@@ -1,40 +1,32 @@
 package pkel.tools
 
-import org.apache.spark.sql.functions._
-
-/** Fused pair-pipeline timing probe:
-  * sbt "Test/runMain pkel.tools.ScaleProbe <cpus> <nConvs> [reps] [vec]"
+/** Pair-pipeline timing probe:
+  * sbt "Test/runMain pkel.tools.ScaleProbe <cpus> <nConvs> [reps] [scored|pairs|buckets|kernel]"
   * Times candidate-pair generation + batched scoring (the bench window) from
-  * the materialized keyed-mention parquet; `vec` adds the precomputed
-  * per-mention embedding column before pair generation. */
+  * the materialized keyed-mention parquet. `scored` (default) scores the
+  * relational candidate pairs, `pairs` only counts them, `buckets` counts the
+  * salted bucket table and `kernel` runs the production `scoreCandidates`. */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val cpus = args.headOption.getOrElse("32")
     val nConvs = args.lift(1).map(_.toLong).getOrElse(20000L)
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val withVec = args.lift(3).contains("vec")
-    val fused = !args.contains("join")
     val spark = graft.Bench.session(cpus)
     val path = graft.Bench.materializeKeyed(spark, nConvs)
-    val embedUdf = udf((s: String) => pkel.scoring.Embedder.default.encode(Option(s).getOrElse("")))
     (1 to reps).foreach { rep =>
-      val keyed0 = spark.read.parquet(path)
-      val keyed = if (withVec) keyed0.withColumn("vec", embedUdf(col("mention"))) else keyed0
+      val keyed = spark.read.parquet(path)
       val t0 = System.nanoTime()
-      val pairs = pkel.blocking.PairGen.candidatePairsWithFeatures(keyed,
-        pkel.blocking.PairGen.Config(fusedBuckets = fused))
+      val pairs = pkel.blocking.PairGen.candidatePairsWithFeatures(keyed)
       val stageTokens = Set("scored", "pairs", "buckets", "kernel")
       val stage = args.reverse.find(stageTokens.contains).getOrElse("scored")
       val n = stage match {
-        case "buckets" => pkel.blocking.PairGen.saltedBucketTable(keyed,
-          pkel.blocking.PairGen.Config(fusedBuckets = fused)).count()
+        case "buckets" => pkel.blocking.PairGen.saltedBucketTable(keyed).count()
         case "pairs" => pairs.count()
-        case "kernel" => pkel.scoring.PairScorer.scoreCandidates(keyed,
-          pkel.blocking.PairGen.Config(fusedBuckets = fused)).count()
+        case "kernel" => pkel.scoring.PairScorer.scoreCandidates(keyed).count()
         case _ => pkel.scoring.PairScorer.scorePairs(pairs).count()
       }
       val sec = (System.nanoTime() - t0) / 1e9
-      println(f"PROBE cpus=$cpus convs=$nConvs vec=$withVec fused=$fused stage=$stage rep=$rep pairs=$n sec=$sec%.2f pps=${n / sec}%.0f")
+      println(f"PROBE cpus=$cpus convs=$nConvs stage=$stage rep=$rep pairs=$n sec=$sec%.2f pps=${n / sec}%.0f")
     }
     spark.stop()
   }
